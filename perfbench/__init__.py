@@ -1,0 +1,1 @@
+"""spark-graft benchmark; run it with ``python3 perfbench/run.py``."""
